@@ -178,7 +178,7 @@ object Bench {
       try run(fn, warmDir) catch { case _: Throwable => () }
     }
 
-    // Pre-warm the CROSS-QUERY trainer memo at the TARGET dir, untimed
+    // Pre-warm the CROSS-QUERY StageStore memo at the TARGET dir, untimed
     // (r16 verdict item 1): q239's contract columns consume the exact
     // q201 kernel through LinkPred.exactDistance; letting the first
     // timed sample train that memo polluted the r16 official number

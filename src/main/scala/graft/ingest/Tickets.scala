@@ -1,5 +1,6 @@
 package graft.ingest
 
+import graft.StageStore
 import graft.text.Cleanse
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -288,8 +289,7 @@ object Tickets {
     * Scale: the quarantine read is one pass; corrupt capture is row-local;
     * the ledger aggregate is a scalar rollup. */
   def q96_corrupt_quarantine(s: SparkSession, dir: String): DataFrame = {
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_quarantine_" +
-      s.sparkContext.applicationId
+    val out = StageStore.scratch(s, "quarantine")
     val line = concat(lit("{\"doc_id\":"), col("doc_id"),
       lit(",\"n_chars\":"), col("n_chars"), lit("}"))
     val bucket = substring(md5(col("doc_id").cast("string").cast("binary")), 1, 1)
@@ -314,7 +314,7 @@ object Tickets {
         md5(concat_ws("\n", sort_array(collect_list(col("_corrupt_record"))))
           .cast("binary")).as("corrupt_md5"))
       .localCheckpoint()
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+    StageStore.drop(s, out)
     ledger
   }
 

@@ -1,11 +1,8 @@
 package graft.ingest
 
-import graft.Tables
-import org.apache.commons.io.FileUtils
+import graft.{StageStore, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-
-import java.io.File
 
 /** WET-style record ingestion (q149) — the Common Crawl WET/WARC shape
   * every pretraining corpus starts from: a flat text file of
@@ -35,10 +32,6 @@ import java.io.File
 object Wet {
 
   private val Sentinel = "GRAFT-WET/1.0\n"
-
-  private[graft] def scratch(s: SparkSession): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_wet_" +
-      s.sparkContext.applicationId
 
   /** Inner frame (pre-checkpoint) for spec plan/shape assertions. */
   private[graft] def wetAgg(s: SparkSession, dir: String, out: String)
@@ -87,9 +80,9 @@ object Wet {
   }
 
   def q149_wet_ingest(s: SparkSession, dir: String): DataFrame = {
-    val out = scratch(s)
+    val out = StageStore.scratch(s, "wet")
     val pinned = wetAgg(s, dir, out).localCheckpoint() // tiny
-    FileUtils.deleteQuietly(new File(out))
+    StageStore.drop(s, out)
     pinned
   }
 

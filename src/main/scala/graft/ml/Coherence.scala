@@ -86,6 +86,8 @@ object Coherence {
         })
 
     // One-set segmentation: cos(v_i, Σ_k v_k) per topic word, then mean.
+    // A zero vector (a word in every window has NPMI 0 with every word)
+    // has no direction: it contributes cosine 0 instead of dividing by 0.
     val svec = npmi.groupBy(col("topic"), col("wj"))
       .agg(sum(col("npmi")).as("s_j"))
     val snorm = svec.groupBy(col("topic"))
@@ -97,7 +99,8 @@ object Coherence {
         sqrt(sum(col("npmi") * col("npmi"))).as("v_norm"))
     perWord.join(snorm, "topic")
       .select(col("topic"), col("wi"),
-        (col("dot") / (col("v_norm") * col("s_norm"))).as("cos"))
+        when(col("v_norm") * col("s_norm") === 0.0, lit(0.0))
+          .otherwise(col("dot") / (col("v_norm") * col("s_norm"))).as("cos"))
       .groupBy(col("topic"))
       .agg(avg(col("cos")).as("coherence"))
       .orderBy(col("topic"))

@@ -1,6 +1,6 @@
 package graft.ml
 
-import graft.Tables
+import graft.{StageStore, Tables}
 import graft.text.Cleanse
 import org.apache.spark.ml.feature.{CountVectorizer, MinHashLSH}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -767,9 +767,11 @@ object Similarity {
       cents, mSub, k, sub)
 
   /** Approximate distance: mSub table lookups + (mSub−1) adds, left fold
-    * in fixed subspace order so both engines produce identical doubles. */
-  private def pqAdcDist(mSub: Int) =
-    (0 until mSub).map(m => expr(s"t$m[c$m]")).reduce(_ + _)
+    * in fixed subspace order so both engines produce identical doubles.
+    * `get` makes an off-contract −1 code (an all-NaN slice, see
+    * [[PqUtil.argminCode]]) a NULL distance, which every ranking drops. */
+  private[ml] def pqAdcDist(mSub: Int): Column =
+    (0 until mSub).map(m => expr(s"get(t$m, c$m)")).reduce(_ + _)
 
   private def pqAdcTopK(e: DataFrame,
       cents: IndexedSeq[IndexedSeq[IndexedSeq[Double]]],
@@ -782,6 +784,7 @@ object Similarity {
     coded.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"), adist.as("adist"))
+      .filter(col("adist").isNotNull)
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= topN)
       .select(col("query_id"), col("neighbor_id"), col("rank"),
@@ -961,6 +964,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         pqAdcDist(8).as("adist"))
+      .filter(col("adist").isNotNull)
       .withColumn("rank", row_number().over(wShort))
       .filter(col("rank") <= kShort)
       .select(col("query_id"), col("neighbor_id"))
@@ -1080,6 +1084,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         pqAdcDist(8).as("adist"))
+      .filter(col("adist").isNotNull)
       .withColumn("rank", row_number().over(wShort))
       .filter(col("rank") <= kShort)
       .select(col("query_id"), col("neighbor_id"))
@@ -1608,52 +1613,15 @@ object Similarity {
        |FROM na CROSS JOIN nb CROSS JOIN mm CROSS JOIN nj CROSS JOIN nu"""
       .stripMargin
 
-  /** Metadata-only SNAPSHOT FINGERPRINT of the documents table under
-    * `dir`: md5 over the sorted (file path, length, mtime) listing — the
-    * same information a table format's snapshot id summarizes. Listing a
-    * directory is a metadata operation (no data read), so the probe costs
-    * what a lake manifest read costs at any scale. Any in-place mutation
-    * (a CDC merge into the corpus, a partition rewrite, a driver
-    * regenerating the dir) changes file names/sizes/mtimes and therefore
-    * the fingerprint. In production on Iceberg/Delta this is the
-    * table's current snapshot/version id. */
-  private[graft] def corpusFingerprint(s: SparkSession, dir: String): String = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-    val it = fs.listFiles(path, true)
-    while (it.hasNext) {
-      val f = it.next()
-      entries += s"${f.getPath.toUri.getPath}|${f.getLen}|${f.getModificationTime}"
-    }
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(entries.sorted.mkString("\n").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-  }
-
-  /** Scratch path for the materialized dedup stage, keyed by
-    * (applicationId, input dir, CONTENT fingerprint): the app id scopes
-    * the stage to the session, the dir md5 keeps a sf0.001 warmup stage
-    * from serving a sf0.1 read (two dirs with identical content still get
-    * distinct stages), and the snapshot fingerprint invalidates the stage
-    * when the corpus mutates IN PLACE mid-session — exactly what
-    * `sink.Lake.applyChangesInto` does to a lake; the round-12 path-only
-    * key silently served stale labels after such a merge. Lives for the
-    * session like a curation DAG's intermediate table lives for the
-    * pipeline run. */
-  private[graft] def dedupStageDir(s: SparkSession, dir: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    s"${System.getProperty("java.io.tmpdir")}/graft_dedup_stage_" +
-      s"${s.sparkContext.applicationId}_${key}_${corpusFingerprint(s, dir)}"
-  }
+  /** [[StageStore]] family of the materialized dedup stage. */
+  private[graft] val DedupStage = "dedup"
 
   /** MATERIALIZED dedup stage — the production curation-DAG shape
     * (round-11 verdict item 4): the q73 union-fixpoint runs ONCE per
-    * (session, input dir) and its per-document output persists as a
-    * split-partitioned parquet stage table; every downstream audit /
-    * split / report derives by SCANNING the stage, never by re-running
-    * the fixpoint. At 100 TB the component fixpoint is hours of cluster
+    * [[StageStore]] key (session, corpus snapshot) and its per-document
+    * output persists as a split-partitioned parquet stage table; every
+    * downstream audit / split / report derives by SCANNING the stage,
+    * never by re-running the fixpoint. At 100 TB the component fixpoint is hours of cluster
     * time — nobody runs it three times to publish an audit, a split
     * assignment and a curation report. q73 itself stays self-contained so
     * the fixpoint's cost remains bench-visible as its own line.
@@ -1666,18 +1634,9 @@ object Similarity {
     *   is_canonical— survivor flag (untouched singletons survive)
     *   split       — 'train'/'val'/'test', 80/10/10 hash of grp (the
     *                 leakage-proof q100 assignment), partition column */
-  private[graft] def dedupStage(s: SparkSession, dir: String): DataFrame = {
-    val out = dedupStageDir(s, dir)
-    // INVARIANT: the _SUCCESS probe-then-write is NOT concurrency-safe
-    // (two sessions racing here would both compute and one overwrite the
-    // other — benign but wasteful); safe under Bench/Verify's strictly
-    // sequential single-session contract (the same assumption Bench's
-    // global unpersist hygiene documents). A multi-writer deployment
-    // replaces this with the table format's atomic snapshot commit.
-    if (!new java.io.File(out, "_SUCCESS").exists())
-      writeStage(s, dir, q73_dedup_union(s, dir), out)
-    s.read.parquet(out)
-  }
+  private[graft] def dedupStage(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(StageStore.stage(s, DedupStage, dir, "documents")(
+      writeStage(s, dir, q73_dedup_union(s, dir), _)))
 
   /** Derive the stage table from per-doc closure labels and persist it
     * split-partitioned at `out` — shared by the cold-start path above and
@@ -1745,13 +1704,11 @@ object Similarity {
     val labels = componentsAdaptive( // matches q73's path — parity with the cold stage
       jaccard.unionByName(simhash).unionByName(minhash))
     pinnedRdds(toks).foreach(_.unpersist(blocking = false))
-    val out = dedupStageDir(s, dir)
-    // republish = overwrite: a stage for this snapshot may already exist
+    // republish = swap: a stage for this snapshot may already exist
     // (e.g. a consumer cold-built it mid-stream); the reconcile's closure
     // is the fresher truth for the same fingerprint
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
-    writeStage(s, dir, labels, out)
-    s.read.parquet(out)
+    s.read.parquet(StageStore.restage(s, DedupStage, dir, "documents")(
+      writeStage(s, dir, labels, _)))
   }
 
   /** Per-source SURVIVORSHIP of the dedup stage — the audit table every

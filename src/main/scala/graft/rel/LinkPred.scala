@@ -1,6 +1,6 @@
 package graft.rel
 
-import graft.Tables
+import graft.{StageStore, Tables}
 import graft.functions.{SharedLn, SharedLnUtil}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -449,25 +449,19 @@ object LinkPred {
       .agg(sum(col("np")).as("n_regs"), sum(col("smj")).as("sum_mj"),
         sum(col("est")).as("n_hat"))
 
-  private val exactDistMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-
-  /** The exact q201 histogram collected once per (application, corpus)
-    * — the trainer-memo pattern (r15 verdict item 5's shape): q239's
-    * contract columns consume the exact kernel without re-running the
-    * pair-closure BFS per call. Rows: (dist, n_pairs, cum_pairs,
+  /** The exact q201 histogram, collected once per lineitem snapshot:
+    * q239's contract columns consume the exact kernel without re-running
+    * the pair-closure BFS per call. Rows: (dist, n_pairs, cum_pairs,
     * eff_diam_p90). */
   private[graft] def exactDistance(s: SparkSession, dir: String)
       : Seq[(Long, Long, Long, Long)] =
-    exactDistMemo.computeIfAbsent(
-      s"${s.sparkContext.applicationId}|q201|$dir|" +
-        graft.ml.Similarity.corpusFingerprint(s, dir),
-      _ => q201_distance_histogram(s, dir)
+    StageStore.value(s, "q201_exact", dir, "lineitem") {
+      q201_distance_histogram(s, dir)
         .select(col("dist").cast("long"), col("n_pairs"),
           col("cum_pairs"), col("eff_diam_p90").cast("long")).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
         .toSeq
-    ).asInstanceOf[Seq[(Long, Long, Long, Long)]]
+    }
 
   /** HyperANF approximate distance profile (q239) — the register-merge
     * swap the q201 scaladoc promises for graphs whose pair closure
@@ -486,7 +480,7 @@ object LinkPred {
     * rho = 57 − bitlen, per-node estimates as one integral division in
     * DECIMAL(38,0)/HUGEINT, micro-nat linear counting): the approximate
     * counts themselves are hash-gated, and the CONTRACT against the
-    * exact q201 kernel (consumed through the trainer memo) is the
+    * exact q201 kernel (consumed through [[exactDistance]]) is the
     * tolerance boolean — the q54-vs-q219 ladder pattern. N(d) is
     * monotonized with a running max exactly as Boldi et al. §4
     * prescribe (the lc→raw correction seam can dip), pair counts are

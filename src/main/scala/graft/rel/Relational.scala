@@ -910,7 +910,7 @@ object Relational {
     * shuffle parallelism so a low-cardinality key still spreads over the
     * full reducer width (splitting the hot key `factor` ways equalizes
     * SHARD sizes; the floor keeps shard COUNT ≥ the cluster's lanes).
-    * Memoized per (session, corpus) via the trainer-memo pattern —
+    * Memoized per (session, snapshot) in [[graft.StageStore]] —
     * SkewAdvisorSpec asserts the fixture-level factor identity. */
   def q46_skew_salted_agg(s: SparkSession, dir: String): DataFrame = {
     val salt = q46SaltCount(s, dir)

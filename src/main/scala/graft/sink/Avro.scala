@@ -1,5 +1,7 @@
 package graft.sink
 
+import graft.StageStore
+
 import java.io.{ObjectInputStream, ObjectOutputStream}
 import java.nio.ByteBuffer
 import java.util
@@ -306,9 +308,9 @@ object Avro {
   }
 
   def q113_avro_roundtrip(s: SparkSession, dir: String): DataFrame = {
-    val out = Orc.scratchDir(s) + "_avro"
+    val out = StageStore.scratch(s, "avro")
     val pinned = avroRoundTripAgg(s, dir, out).localCheckpoint() // tiny
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+    StageStore.drop(s, out)
     pinned
   }
 
@@ -352,9 +354,9 @@ object Avro {
   }
 
   def q132_avro_evolution(s: SparkSession, dir: String): DataFrame = {
-    val out = Orc.scratchDir(s) + "_avroevo"
+    val out = StageStore.scratch(s, "avroevo")
     val pinned = avroEvolutionAgg(s, dir, out).localCheckpoint() // tiny
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+    StageStore.drop(s, out)
     pinned
   }
 

@@ -1,11 +1,8 @@
 package graft.sink
 
-import graft.Tables
-import org.apache.commons.io.FileUtils
+import graft.{StageStore, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-
-import java.io.File
 
 /** Dynamic partition pruning (q142) — the OTHER half of partition
   * pruning: q88/q91 prove STATIC pruning (literal partition predicates
@@ -61,9 +58,9 @@ object Dpp {
   }
 
   def q142_dpp_star_lake(s: SparkSession, dir: String): DataFrame = {
-    val out = Orc.scratchDir(s) + "_dpp"
+    val out = StageStore.scratch(s, "dpp")
     val pinned = dppAgg(s, dir, out).localCheckpoint() // tiny
-    FileUtils.deleteQuietly(new File(out))
+    StageStore.drop(s, out)
     pinned
   }
 

@@ -1,5 +1,6 @@
 package graft.sink
 
+import graft.StageStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -96,18 +97,12 @@ object Orc {
       .orderBy(col("source"))
   }
 
-  /** Per-session scratch dir (app id is unique per SparkContext): two JVMs
-    * running concurrently (bench + verify) must not overwrite each other's
-    * round-trip directory mid-read. The result is pinned BEFORE the
-    * directory is deleted, so nothing is left behind after the run. */
-  private[graft] def scratchDir(s: SparkSession): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_orc_roundtrip_" +
-      s.sparkContext.applicationId
-
+  /** The result is pinned BEFORE the session's scratch dir is deleted,
+    * so nothing is left behind after the run. */
   def q88_orc_roundtrip(s: SparkSession, dir: String): DataFrame = {
-    val out = scratchDir(s)
+    val out = StageStore.scratch(s, "orc_roundtrip")
     val pinned = orcRoundTripAgg(s, dir, out).localCheckpoint() // tiny
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+    StageStore.drop(s, out)
     pinned
   }
 
@@ -143,9 +138,9 @@ object Orc {
   }
 
   def q91_jsonl_roundtrip(s: SparkSession, dir: String): DataFrame = {
-    val out = scratchDir(s) + "_jsonl"
+    val out = StageStore.scratch(s, "jsonl_roundtrip")
     val pinned = jsonlRoundTripAgg(s, dir, out).localCheckpoint() // tiny
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+    StageStore.drop(s, out)
     pinned
   }
 

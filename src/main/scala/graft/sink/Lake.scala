@@ -1,5 +1,6 @@
 package graft.sink
 
+import graft.StageStore
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -196,13 +197,13 @@ object Lake {
     * hash gate. Scratch layout is per-app-id (q88 discipline); the result
     * is pinned before cleanup. */
   def q98_merge_into_lake(s: SparkSession, dir: String): DataFrame = {
-    val lake = Orc.scratchDir(s) + "_lake"
+    val lake = StageStore.scratch(s, "lake")
     val docs = graft.Tables.documents(s, dir)
       .select(col("doc_id"), col("text"), col("lang"), col("source"))
     Parquet.writePartitioned(docs, lake, Seq("lang"))
     mergeInto(s, lake, nextSnapshot(s, dir))
     val pinned = mergedLakeAgg(s, lake).localCheckpoint() // tiny
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(lake))
+    StageStore.drop(s, lake)
     pinned
   }
 
@@ -265,37 +266,39 @@ object Lake {
   private[sink] def writeOneFilePerCell(s: SparkSession, rows: DataFrame,
       bucket: Column, lake: String): Unit = {
     val staging = lake + "_staging"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(staging))
+    val fs = hfs(s, staging)
+    val stagingRoot = new org.apache.hadoop.fs.Path(staging)
+    fs.delete(stagingRoot, true)
     rows.withColumn("bucket", bucket)
       .repartition(col("lang"), col("bucket"))
       .write.mode("overwrite").partitionBy("lang", "bucket").parquet(staging)
-    val fs = hfs(s, staging)
     val lakeRoot = new org.apache.hadoop.fs.Path(lake)
     fs.mkdirs(lakeRoot)
-    fs.listStatus(new org.apache.hadoop.fs.Path(staging)).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("lang="))
-      .foreach { langDir =>
-        val dest = new org.apache.hadoop.fs.Path(lakeRoot, langDir.getPath.getName)
-        fs.mkdirs(dest)
-        fs.listStatus(langDir.getPath).toSeq
-          .filter(b => b.isDirectory && b.getPath.getName.startsWith("bucket="))
-          .foreach { bDir =>
-            val b = bDir.getPath.getName.stripPrefix("bucket=").toLong
-            fs.listStatus(bDir.getPath).toSeq
-              .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
-              .foreach { f =>
-                // keep the part- prefix (partitionFileCounts and hidden-
-                // file conventions key on it); prefix the bucket for
-                // uniqueness within the lang dir
-                val nm = f"part-b$b%02d-" +
-                  f.getPath.getName.stripPrefix("part-")
-                require(fs.rename(f.getPath,
-                  new org.apache.hadoop.fs.Path(dest, nm)),
-                  s"fixture rename failed for ${f.getPath}")
-              }
-          }
-      }
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(staging))
+    try {
+      fs.listStatus(stagingRoot).toSeq
+        .filter(st => st.isDirectory && st.getPath.getName.startsWith("lang="))
+        .foreach { langDir =>
+          val dest = new org.apache.hadoop.fs.Path(lakeRoot, langDir.getPath.getName)
+          fs.mkdirs(dest)
+          fs.listStatus(langDir.getPath).toSeq
+            .filter(b => b.isDirectory && b.getPath.getName.startsWith("bucket="))
+            .foreach { bDir =>
+              val b = bDir.getPath.getName.stripPrefix("bucket=").toLong
+              fs.listStatus(bDir.getPath).toSeq
+                .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
+                .foreach { f =>
+                  // keep the part- prefix (partitionFileCounts and hidden-
+                  // file conventions key on it); prefix the bucket for
+                  // uniqueness within the lang dir
+                  val nm = f"part-b$b%02d-" +
+                    f.getPath.getName.stripPrefix("part-")
+                  require(fs.rename(f.getPath,
+                    new org.apache.hadoop.fs.Path(dest, nm)),
+                    s"fixture rename failed for ${f.getPath}")
+                }
+            }
+        }
+    } finally fs.delete(stagingRoot, true)
   }
 
   private[graft] def compactLake(s: SparkSession, lakeDir: String,
@@ -310,28 +313,37 @@ object Lake {
     // rows — the layout the oracle predicts is unchanged; only the
     // redundant intermediate materialization is gone.
     val staging = lakeDir + "_compact"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(staging))
+    val fs = hfs(s, lakeDir)
+    val stagingRoot = new org.apache.hadoop.fs.Path(staging)
+    fs.delete(stagingRoot, true)
     s.read.parquet(lakeDir)
       .repartition(col("lang")) // one task per partition dir
       .write.mode("overwrite")
       .option("maxRecordsPerFile", maxRecords)
       .partitionBy("lang").parquet(staging)
-    val fs = hfs(s, lakeDir)
     val lakeRoot = new org.apache.hadoop.fs.Path(lakeDir)
-    fs.listStatus(new org.apache.hadoop.fs.Path(staging)).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("lang="))
-      .foreach { langDir =>
-        val dest = new org.apache.hadoop.fs.Path(lakeRoot, langDir.getPath.getName)
-        fs.delete(dest, true) // replace the fragmented partition dir
-        require(fs.rename(langDir.getPath, dest),
-          s"compaction swap failed for ${langDir.getPath}")
-      }
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(staging))
+    try {
+      fs.listStatus(stagingRoot).toSeq
+        .filter(st => st.isDirectory && st.getPath.getName.startsWith("lang="))
+        .foreach { langDir =>
+          val name = langDir.getPath.getName
+          val dest = new org.apache.hadoop.fs.Path(lakeRoot, name)
+          // swap: the fragmented dir moves aside into staging, and moves
+          // back if the compacted dir cannot take its place
+          val aside = new org.apache.hadoop.fs.Path(stagingRoot, s"$name.old")
+          val hadOld = fs.exists(dest) && fs.rename(dest, aside)
+          if (!fs.rename(langDir.getPath, dest)) {
+            if (hadOld) fs.rename(aside, dest)
+            throw new IllegalStateException(
+              s"compaction swap failed for ${langDir.getPath}")
+          }
+        }
+    } finally fs.delete(stagingRoot, true) // compacted leftovers + old dirs
   }
 
   def q126_compact_small_files(s: SparkSession, dir: String): DataFrame = {
-    val lake = Orc.scratchDir(s) + "_frag"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(lake))
+    val lake = StageStore.scratch(s, "frag")
+    StageStore.drop(s, lake)
     val docs = graft.Tables.documents(s, dir)
       .select(col("doc_id"), col("text"), col("lang"), col("source"))
     // Build the fragmented fixture in ONE job, not 16 sequential appends
@@ -360,7 +372,7 @@ object Lake {
         col("files_after"), col("text_sig"))
       .orderBy(col("lang"))
     val pinned = agg.localCheckpoint() // tiny
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(lake))
+    StageStore.drop(s, lake)
     pinned
   }
 
@@ -511,8 +523,8 @@ object Lake {
     * v1 from `documents` and v2 from the same delta rule, so time travel
     * serving anything but the exact historical content breaks the gate. */
   def q127_time_travel(s: SparkSession, dir: String): DataFrame = {
-    val lake = Orc.scratchDir(s) + "_tt"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(lake))
+    val lake = StageStore.scratch(s, "tt")
+    StageStore.drop(s, lake)
     val docs = graft.Tables.documents(s, dir)
       .select(col("doc_id"), col("text"), col("lang"), col("source"))
     writeVersion(s, lake, docs, replaced = Seq.empty)
@@ -533,7 +545,7 @@ object Lake {
           col("text_sig"))
     }.reduce(_ unionByName _).orderBy(col("version"), col("lang"))
     val pinned = agg.localCheckpoint() // tiny
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(lake))
+    StageStore.drop(s, lake)
     pinned
   }
 

@@ -1,6 +1,6 @@
 package graft.sink
 
-import graft.Tables
+import graft.{StageStore, Tables}
 import graft.rel.JoinCard
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -90,29 +90,12 @@ object RangeLayout {
 
   // ---------------------------------------------------------------- q163b
 
-  /** Memoized advice: the boundary array IS what the writer consumes
-    * (trainer-memo keyed on applicationId + events fingerprint). */
-  private val boundaryMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Long]]
-
-  private def eventsFingerprint(s: SparkSession, dir: String): String = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
-    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(path, true)
-    val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (it.hasNext) {
-      val f = it.next()
-      entries +=
-        s"${f.getPath.toUri.getPath}|${f.getLen}|${f.getModificationTime}"
-    }
-    entries.sorted.mkString(",")
-  }
-
+  /** The advised boundary array, memoized per events snapshot: it IS
+    * what the writer consumes. */
   private[graft] def recommendedBoundaries(s: SparkSession,
       dir: String): Seq[Long] =
-    boundaryMemo.computeIfAbsent(
-      s"${s.sparkContext.applicationId}|${eventsFingerprint(s, dir)}",
-      _ => boundaryArr(s, dir).head().getSeq[Long](0))
+    StageStore.value(s, "range_boundaries", dir, "events")(
+      boundaryArr(s, dir).head().getSeq[Long](0))
 
   /** Advised writer: lays events out as one file per advisor bucket and
     * reports the physical per-bucket counts next to the advisor's
@@ -121,8 +104,8 @@ object RangeLayout {
     * oracle). */
   def q163b_advised_layout(s: SparkSession, dir: String): DataFrame = {
     val bnds = recommendedBoundaries(s, dir)
-    val lake = Orc.scratchDir(s) + "_rangelayout"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(lake))
+    val lake = StageStore.scratch(s, "rangelayout")
+    StageStore.drop(s, lake)
     val barr = typedlit(bnds)
     Tables.events(s, dir)
       .select(col("event_id"), col("ts_us"))
@@ -133,10 +116,13 @@ object RangeLayout {
       .groupBy(col("bucket")).agg(count(lit(1)).as("n_rows"))
     val advised = q163_range_boundaries(s, dir)
       .select(col("bucket"), col("n_rows").as("advised_rows"))
-    val files = new java.io.File(lake).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
-      .map(d => (d.getName.stripPrefix("bucket=").toInt.toLong,
-        d.listFiles().count(_.getName.endsWith(".parquet")).toLong))
+    val root = new org.apache.hadoop.fs.Path(lake)
+    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val files = fs.listStatus(root)
+      .filter(d => d.isDirectory && d.getPath.getName.startsWith("bucket="))
+      .map(d => (d.getPath.getName.stripPrefix("bucket=").toInt.toLong,
+        fs.listStatus(d.getPath)
+          .count(_.getPath.getName.endsWith(".parquet")).toLong))
     import s.implicits._
     val fileCounts = files.toSeq.toDF("bucket", "n_files")
     val out = physical.join(advised, Seq("bucket"))
@@ -145,7 +131,7 @@ object RangeLayout {
         (col("n_rows") === col("advised_rows")).as("matches_advice"))
       .orderBy(col("bucket"))
     val pinned = out.localCheckpoint()
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(lake))
+    StageStore.drop(s, lake)
     pinned
   }
 

@@ -28,21 +28,22 @@ object RunLog {
     val p = Paths.get(path)
     if (p.getParent != null) Files.createDirectories(p.getParent)
     val listener = new QueryExecutionListener {
-      private def write(qe: QueryExecution, durationNs: Long, status: String,
-          detail: String): Unit = {
+      // a failed query reports no duration, so its line logs null
+      private def write(qe: QueryExecution, durationNs: Option[Long],
+          status: String, detail: String): Unit = {
         val line =
-          s"""{"status":"$status","duration_sec":${durationNs / 1e9},""" +
-            s""""rows_hint":${qe.observedMetrics.size},""" +
-            s""""plan":"${esc(qe.executedPlan.nodeName)}"""" +
+          s"""{"status":"$status","duration_sec":""" +
+            durationNs.map(ns => (ns / 1e9).toString).getOrElse("null") +
+            s""","plan":"${esc(qe.executedPlan.nodeName)}"""" +
             (if (detail.isEmpty) "}" else s""","detail":"${esc(detail)}"}""") +
             "\n"
         Files.write(p, line.getBytes(StandardCharsets.UTF_8),
           StandardOpenOption.CREATE, StandardOpenOption.APPEND)
       }
       override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit = write(qe, durationNs, "ok", funcName)
+          durationNs: Long): Unit = write(qe, Some(durationNs), "ok", funcName)
       override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = write(qe, 0L, "error",
+          exception: Exception): Unit = write(qe, None, "error",
         s"$funcName: ${exception.getMessage}")
     }
     spark.listenerManager.register(listener)

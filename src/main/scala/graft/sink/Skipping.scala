@@ -1,11 +1,8 @@
 package graft.sink
 
-import graft.Tables
-import org.apache.commons.io.FileUtils
+import graft.{StageStore, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-
-import java.io.File
 
 /** File-level data-skipping index (q131) — the Delta/Iceberg stats-based
   * pruning model on plain parquet: per-file min/max zone maps plus a
@@ -61,8 +58,8 @@ object Skipping {
   }
 
   def q131_data_skipping(s: SparkSession, dir: String): DataFrame = {
-    val lake = Orc.scratchDir(s) + "_skip"
-    FileUtils.deleteQuietly(new File(lake))
+    val lake = StageStore.scratch(s, "skip")
+    StageStore.drop(s, lake)
     val docs = Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
     val mx = docs.agg(max(col("doc_id"))).head().getLong(0)
@@ -146,7 +143,7 @@ object Skipping {
       (i, p, isPresent, zones.length.toLong, minmax.length.toLong,
         cand.length.toLong, if (isPresent) 1L else 0L, noFalseNeg, scanOk)
     }
-    FileUtils.deleteQuietly(new File(lake))
+    StageStore.drop(s, lake)
     import s.implicits._
     rows.toDF("probe_i", "probe_id", "present", "n_files",
       "n_minmax_pass", "n_candidates", "n_true", "no_false_neg",

@@ -1,5 +1,6 @@
 package graft.ingest
 
+import graft.StageStore
 import graft.text.SparkTestSession
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -12,7 +13,7 @@ class WetSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   test("round trip is lossless per document; lengths validate") {
-    val out = Wet.scratch(spark) + "_spec"
+    val out = StageStore.scratch(spark, "wet_spec")
     try {
       val agg = Wet.wetAgg(spark, sf, out).collect()
       val docs = graft.Tables.documents(spark, sf)

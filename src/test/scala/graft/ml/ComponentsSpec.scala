@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.StageStore
 import graft.text.SparkTestSession
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -284,7 +285,8 @@ class ComponentsSpec extends AnyFunSuite {
 
   test("dedup stage materializes once; audits derive from the stage scan") {
     val dir = "/root/testdata/sf0.001"
-    val stageDir = new java.io.File(Similarity.dedupStageDir(spark, dir))
+    val stageDir = new java.io.File(
+      StageStore.stagePath(spark, Similarity.DedupStage, dir, "documents"))
     org.apache.commons.io.FileUtils.deleteQuietly(stageDir) // isolate
     // first derived query pays fixpoint + write; its PLAN is a stage scan
     val audit = Similarity.q73b_dedup_survivorship(spark, dir)
@@ -340,12 +342,13 @@ class ComponentsSpec extends AnyFunSuite {
       (1L, dupText, "web"), (2L, dupText, "web"),
       (3L, "completely different words about spark query planning", "web"),
       (4L, "yet another unrelated document mentioning parquet files", "wiki")))
-    val key1 = Similarity.dedupStageDir(spark, dir)
+    val key1 = StageStore.stagePath(spark, Similarity.DedupStage, dir, "documents")
     val s1 = Similarity.dedupStage(spark, dir).collect()
     assert(s1.length == 4, "stage covers the v1 corpus")
     assert(s1.count(_.getAs[Boolean]("flagged")) == 2, "the twin pair is flagged")
     // stable corpus, same session → same key, stage served from disk
-    assert(Similarity.dedupStageDir(spark, dir) == key1, "key stable while corpus is")
+    assert(StageStore.stagePath(spark, Similarity.DedupStage, dir, "documents")
+      == key1, "key stable while corpus is")
     // MUTATE IN PLACE (what a CDC merge does to a lake): add a third twin
     // and a fresh doc — the round-12 path-md5 key would serve the stale
     // 4-row stage here; the content fingerprint must recompute
@@ -353,7 +356,7 @@ class ComponentsSpec extends AnyFunSuite {
       (1L, dupText, "web"), (2L, dupText, "web"), (5L, dupText, "web"),
       (3L, "completely different words about spark query planning", "web"),
       (4L, "yet another unrelated document mentioning parquet files", "wiki")))
-    val key2 = Similarity.dedupStageDir(spark, dir)
+    val key2 = StageStore.stagePath(spark, Similarity.DedupStage, dir, "documents")
     assert(key2 != key1, "fingerprint must change when corpus files change")
     val s2 = Similarity.dedupStage(spark, dir).collect()
     assert(s2.length == 5, "stage recomputed over the mutated corpus")

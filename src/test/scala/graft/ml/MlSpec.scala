@@ -65,34 +65,41 @@ class MlSpec extends AnyFunSuite {
     // 110-token tumbling boundary, so only true sliding windows co-count it
     val t1 = Array.fill(220)("x")
     t1(100) = "apple"; t1(115) = "banana"
-    val corpus = Seq(t1.toSeq, Seq("apple", "banana", "y"))
-    val docs = corpus.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-      .toDF("doc_id", "tokens")
-    val got = Coherence.cv(spark, docs, Seq(Seq("apple", "banana")))
-      .collect()(0).getAs[Double]("coherence")
+    // second input: "a" is in every window, so its NPMI vector is all
+    // zeros — a zero-norm vector contributes cosine 0, not a division by 0
+    val inputs = Seq(
+      (Seq(t1.toSeq, Seq("apple", "banana", "y")), Seq("apple", "banana")),
+      (Seq(Seq("a", "b"), Seq("a", "c")), Seq("a", "b")))
+    inputs.foreach { case (corpus, words) =>
+      val docs = corpus.zipWithIndex.map { case (t, i) => (i.toLong + 1, t) }
+        .toDF("doc_id", "tokens")
+      val got = Coherence.cv(spark, docs, Seq(words))
+        .collect()(0).getAs[Double]("coherence")
 
-    // independent oracle: literally enumerate every sliding window
-    val windows = corpus.flatMap { toks =>
-      val L = toks.length
-      val starts = if (L <= Coherence.WindowSize) Seq(0)
-      else 0 to (L - Coherence.WindowSize)
-      starts.map(s => toks.slice(s, s + Coherence.WindowSize).toSet)
+      // independent oracle: literally enumerate every sliding window
+      val windows = corpus.flatMap { toks =>
+        val L = toks.length
+        val starts = if (L <= Coherence.WindowSize) Seq(0)
+        else 0 to (L - Coherence.WindowSize)
+        starts.map(s => toks.slice(s, s + Coherence.WindowSize).toSet)
+      }
+      val W = windows.size.toDouble
+      def p(ws: String*): Double = windows.count(w => ws.forall(w)) / W
+      val eps = 1e-12
+      def npmi(a: String, b: String): Double = {
+        val pij = p(a, b)
+        math.log((pij + eps) / (p(a) * p(b) + eps)) / -math.log(pij + eps)
+      }
+      val vecs = words.map(wi => words.map(wj => npmi(wi, wj)))
+      val sv = words.indices.map(j => vecs.map(_(j)).sum)
+      def norm(v: Seq[Double]) = math.sqrt(v.map(x => x * x).sum)
+      val expect = vecs.map { v =>
+        val n = norm(v) * norm(sv)
+        if (n == 0.0) 0.0 else v.zip(sv).map { case (a, b) => a * b }.sum / n
+      }.sum / vecs.size
+      assert(math.abs(got - expect) < 1e-7,
+        s"c_v of $words was $got, expected $expect")
     }
-    val W = windows.size.toDouble
-    def p(ws: String*): Double = windows.count(w => ws.forall(w)) / W
-    val eps = 1e-12
-    def npmi(a: String, b: String): Double = {
-      val pij = p(a, b)
-      math.log((pij + eps) / (p(a) * p(b) + eps)) / -math.log(pij + eps)
-    }
-    val words = Seq("apple", "banana")
-    val vecs = words.map(wi => words.map(wj => npmi(wi, wj)))
-    val sv = words.indices.map(j => vecs.map(_(j)).sum)
-    def norm(v: Seq[Double]) = math.sqrt(v.map(x => x * x).sum)
-    val expect = vecs.map(v =>
-      v.zip(sv).map { case (a, b) => a * b }.sum / (norm(v) * norm(sv)))
-      .sum / vecs.size
-    assert(math.abs(got - expect) < 1e-7, s"c_v was $got, expected $expect")
   }
 
   test("M2/M5 LDA smoke: fixed seed, k topics, finite weights, top-5 terms") {
@@ -163,6 +170,18 @@ class MlSpec extends AnyFunSuite {
       val lines = scala.io.Source.fromFile(path).getLines().toList
       assert(lines.nonEmpty)
       assert(lines.forall(_.contains("\"status\":\"ok\"")))
+      assert(lines.forall(!_.contains("rows_hint")),
+        "observation-map counts are not row counts")
+      // a failing query logs an error line with a null duration, not 0
+      intercept[Exception](spark.range(3)
+        .select(lit(1) / (col("id") - col("id"))).collect())
+      def errors() = scala.io.Source.fromFile(path).getLines()
+        .filter(_.contains("\"status\":\"error\"")).toList
+      while (errors().isEmpty && System.nanoTime() < deadline)
+        Thread.sleep(100)
+      assert(errors().nonEmpty, "the failed query must be logged")
+      assert(errors().forall(_.contains("\"duration_sec\":null,")),
+        errors().mkString("\n"))
     } finally spark.listenerManager.unregister(l)
   }
 

@@ -92,4 +92,20 @@ class PqSpec extends AnyFunSuite {
       col("emb"), cs, ss).as("c")).head().getInt(0)
     assert(got == 1, s"tie must resolve to first minimal index, got $got")
   }
+
+  test("an all-NaN slice encodes to -1 and its ADC distance is null, not an error") {
+    val cs = cents
+    val ss = cs.map(_.map(_.map(x => x * x).sum))
+    import spark.implicits._
+    val df = Seq((1L, Array.fill(mSub * sub)(Double.NaN),
+      Array.fill(mSub * sub)(0.5))).toDF("vec_id", "emb", "qemb")
+    val codes = (0 until mSub).map(m => VecFunctions.pq_argmin_code(
+      expr(s"slice(emb, ${m * sub + 1}, $sub)"), cs(m), ss(m)).as(s"c$m"))
+    val tables = (0 until mSub).map(m => VecFunctions.pq_adc_table(
+      expr(s"slice(qemb, ${m * sub + 1}, $sub)"), cs(m), ss(m)).as(s"t$m"))
+    val r = df.select(codes ++ tables: _*)
+      .select(col("c0"), Similarity.pqAdcDist(mSub).as("adist")).head()
+    assert(r.getInt(0) == -1, "every score is NaN: the clamped code is -1")
+    assert(r.isNullAt(1), s"a -1 code must give a null distance, got ${r.get(1)}")
+  }
 }

@@ -1,6 +1,6 @@
 package graft.sink
 
-import graft.Tables
+import graft.{StageStore, Tables}
 import graft.text.SparkTestSession
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -34,7 +34,7 @@ class SinkSpec extends AnyFunSuite {
     // deletes the shared scratch dir, so inner's plan must never depend on
     // files q88 already removed (the old ordering worked only because the
     // InMemoryFileIndex listing was cached — fragile)
-    val inner = Orc.orcRoundTripAgg(spark, dir, Orc.scratchDir(spark) + "_orc_spec")
+    val inner = Orc.orcRoundTripAgg(spark, dir, StageStore.scratch(spark, "orc_spec"))
     // pruning: the read inside q88 filters on the partition column — the
     // scan must carry a PartitionFilters entry, not a post-scan filter;
     // assert BEFORE invoking q88 so the two never share filesystem state
@@ -59,7 +59,7 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("JSONL round-trip: text content survives escaping, partition-pruned") {
-    val specOut = Orc.scratchDir(spark) + "_jsonl_spec"
+    val specOut = StageStore.scratch(spark, "jsonl_spec")
     val inner = Orc.jsonlRoundTripAgg(spark, dir, specOut)
     val plan = inner.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("lang"),
@@ -327,7 +327,7 @@ class SinkSpec extends AnyFunSuite {
         (3L, "completely different words about spark query planning", "en", "web"),
         (4L, "yet another unrelated document mentioning parquet files", "fr", "wiki"))
       .toDF("doc_id", "text", "lang", "source"), lake, Seq("lang"))
-    val key1 = Similarity.dedupStageDir(spark, root)
+    val key1 = StageStore.stagePath(spark, Similarity.DedupStage, root, "documents")
     val audit1 = Similarity.q73b_dedup_survivorship(spark, root).collect()
     assert(audit1.map(_.getAs[Long]("n_docs")).sum == 4)
     assert(audit1.map(_.getAs[Long]("n_dropped")).sum == 1, "one of two twins drops")
@@ -335,7 +335,7 @@ class SinkSpec extends AnyFunSuite {
     Lake.applyChangesInto(spark, lake, Seq(
         (5L, dupText, "en", "web", "U"), (4L, "", "", "", "D"))
       .toDF("doc_id", "text", "lang", "source", "op"))
-    val key2 = Similarity.dedupStageDir(spark, root)
+    val key2 = StageStore.stagePath(spark, Similarity.DedupStage, root, "documents")
     assert(key2 != key1, "CDC merge must change the stage fingerprint")
     // all three stage consumers recompute over the merged corpus and
     // their internal gates (leak_free, kept arithmetic) still hold

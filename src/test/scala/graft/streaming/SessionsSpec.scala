@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import graft.StageStore
 import graft.text.SparkTestSession
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -886,7 +887,8 @@ class SessionsSpec extends AnyFunSuite {
           s"only_cold=${(cold -- reconciled).take(5)}")
       // the batch consumers now read the republished stage without any
       // recompute: no file under the stage dir changes
-      val stageDir = java.nio.file.Paths.get(Similarity.dedupStageDir(spark, root))
+      val stageDir = java.nio.file.Paths.get(
+        StageStore.stagePath(spark, Similarity.DedupStage, root, "documents"))
       def state(): Map[String, Long] = {
         val buf = scala.collection.mutable.Map.empty[String, Long]
         java.nio.file.Files.walk(stageDir).forEach { p =>
@@ -915,7 +917,8 @@ class SessionsSpec extends AnyFunSuite {
         "the jaccard-only twin must be dropped by the closure yet " +
           s"invisible to the direct band rule (closure-only drops: " +
           s"${closureDropped -- directDropped})")
-      val stageDir2 = Similarity.dedupStageDir(spark, root2) // before delete
+      val stageDir2 = // before delete
+        StageStore.stagePath(spark, Similarity.DedupStage, root2, "documents")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root2))
       org.apache.commons.io.FileUtils.deleteQuietly(stageDir.toFile)
